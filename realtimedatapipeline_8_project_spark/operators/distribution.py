@@ -250,6 +250,29 @@ FROM ans a JOIN hist h ON a.grp = h.grp AND a.bucket_id = h.bucket_id
 HH_FRAC = 100  # heavy = at least 1/HH_FRAC (1%) of all rows
 
 
+# pandas dtypes a candidate key column may be built with, mapped to
+# nullable extension dtypes: the sentinel key slot is NULL, which a plain
+# numpy int64 cannot hold, a float dtype turns into NaN and numpy str
+# silently stringifies to "None" — any of which breaks the
+# candidate-vs-sentinel split and corrupts the totals.
+_NULLABLE_DTYPES = {
+    "int64": "Int64",
+    "Int64": "Int64",
+    "str": "string",
+    "string": "string",
+}
+
+
+def _nullable_dtype(pd_dtype: str) -> str:
+    try:
+        return _NULLABLE_DTYPES[pd_dtype]
+    except KeyError:
+        raise ValueError(
+            f"pd_dtype {pd_dtype!r} has no nullable pandas dtype for the "
+            f"NULL sentinel key; use one of {sorted(_NULLABLE_DTYPES)}"
+        ) from None
+
+
 def _make_partition_candidates(frac: int, col: str, pd_dtype: str):
     """Build the per-partition candidate generator as a SELF-CONTAINED
     closure (cloudpickle ships it by value — module-level functions
@@ -268,10 +291,7 @@ def _make_partition_candidates(frac: int, col: str, pd_dtype: str):
     key lineage). Keys are non-null by the operator contract, so NULL
     is an unambiguous marker."""
 
-    # nullable extension dtypes: the sentinel key slot is NULL, which a
-    # plain numpy int64 cannot hold and numpy str silently stringifies
-    # to "None"
-    pd_dtype = {"int64": "Int64", "str": "string"}.get(pd_dtype, pd_dtype)
+    pd_dtype = _nullable_dtype(pd_dtype)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
@@ -352,9 +372,7 @@ def _make_grouped_candidates(frac: int, grp: str, col: str, pd_dtypes):
     (group, partition) — key NULL, ``part_rows`` = that group's row
     count in this partition — so the per-group totals come from a
     candidate-sized SUM instead of a third corpus scan."""
-    pd_dtypes = tuple(
-        {"int64": "Int64", "str": "string"}.get(d, d) for d in pd_dtypes
-    )
+    pd_dtypes = tuple(_nullable_dtype(d) for d in pd_dtypes)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd

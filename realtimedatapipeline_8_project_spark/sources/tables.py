@@ -71,15 +71,17 @@ _ARTIFACT_OK: set[tuple] = set()
 
 def _artifact_stamp(root: str) -> tuple | None:
     """Layout fingerprint of an artifact root: (size, mtime) of the root
-    directory, its immediate children, AND its grandchildren. Artifacts
-    are at most two levels deep (root/component-dir/part-*.parquet), so
-    this covers every file: create/delete/rename anywhere moves a parent
-    mtime, and an IN-PLACE overwrite or truncation of any part file —
-    which moves neither its parent's nor the root's mtime (ADVICE r15) —
-    changes that file's own (size, mtime) entry. A memoized verification
-    can therefore never survive the manipulations the rebuild-on-doubt
-    probes exist to catch (pinned by the corrupted-artifact battery,
-    incl. the grandchild-truncation case in test_review_hardening).
+    directory and of EVERY entry below it, at any depth. Artifacts nest
+    to different depths (root/component-dir/part-*.parquet, and the
+    incremental indexes' root/postings/batch_id=N/part-*.parquet), so
+    the walk recurses through every directory: create/delete/rename
+    anywhere moves a parent mtime, and an IN-PLACE overwrite or
+    truncation of any part file — which moves no directory mtime
+    (ADVICE r15) — changes that file's own (size, mtime) entry. A
+    memoized verification can therefore never survive the manipulations
+    the rebuild-on-doubt probes exist to catch (pinned by the
+    corrupted-artifact battery and tests/test_artifact_stamp.py).
+    Artifact trees are small (tens of files), so the walk is cheap.
     Non-path keys (bucketed catalog tables) stamp as None — their
     existence is already re-checked via the catalog on every call."""
     try:
@@ -88,7 +90,7 @@ def _artifact_stamp(root: str) -> tuple | None:
         return None
     kids = []
 
-    def _scan(base: str, prefix: str, recurse: bool) -> None:
+    def _scan(base: str, prefix: str) -> None:
         try:
             entries = sorted(os.listdir(base))
         except OSError:
@@ -101,10 +103,10 @@ def _artifact_stamp(root: str) -> tuple | None:
                 kids.append((prefix + e, -1, -1))
                 continue
             kids.append((prefix + e, est.st_size, est.st_mtime_ns))
-            if recurse and os.path.isdir(p):
-                _scan(p, prefix + e + "/", False)
+            if os.path.isdir(p):
+                _scan(p, prefix + e + "/")
 
-    _scan(root, "", True)
+    _scan(root, "")
     return (st.st_mtime_ns, tuple(kids))
 
 

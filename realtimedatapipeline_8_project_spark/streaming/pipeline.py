@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..operators.enrich import enrich_events
 from ..schemas import EVENTS
 from .metrics import MetricsRecorder
-from .sinks import write_batch_fanout, write_m4, write_moments
+from .sinks import fanout_batch, write_batch_fanout, write_m4, write_moments
 
 
 def read_kafka_stream(
@@ -162,20 +162,24 @@ def run_stats_replay(
     """Bounded replay maintaining the incremental observability state from
     the raw decoded stream: per-user integer moment tables (z-score
     outlier state) and per-(user, hour) M4 downsample cells, one
-    idempotent partial per micro-batch. The serving reads (read_moments /
-    read_m4 + outliers_vs_moments) then equal the one-pass batch answers
-    bit-for-bit — pinned in tests/test_streaming.py."""
+    idempotent partial per micro-batch, both written concurrently from
+    one cached decode of the batch (sinks.fanout_batch). The serving
+    reads (read_moments / read_m4 + outliers_vs_moments) then equal the
+    one-pass batch answers bit-for-bit — pinned in tests/test_streaming.py."""
     src = read_json_stream(spark, source_path, max_files_per_trigger)
     events = decode_events(src)
-
-    def _fanout(batch_df: DataFrame, batch_id: int) -> None:
-        write_moments(batch_df, batch_id, output_dir)
-        write_m4(batch_df, batch_id, output_dir)
 
     q = (
         events.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_fanout)
+        .foreachBatch(
+            lambda batch_df, batch_id: fanout_batch(
+                batch_df,
+                batch_id,
+                output_dir,
+                {"moments": write_moments, "m4": write_m4},
+            )
+        )
         .trigger(availableNow=True)
         .start()
     )

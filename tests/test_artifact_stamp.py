@@ -8,7 +8,9 @@ scored-index postings/part-*.parquet) moves neither the root's nor the
 child dir's mtime, so a memoized verification would have served a
 corrupted artifact the per-call probe it replaced would have caught.
 The r16 stamp records (size, mtime) of root, children AND
-grandchildren, so that manipulation invalidates the memo."""
+grandchildren, so that manipulation invalidates the memo. Incremental
+index roots nest one level deeper (postings/batch_id=N/part-*.parquet),
+so the stamp now walks the whole artifact tree."""
 
 from __future__ import annotations
 
@@ -16,6 +18,7 @@ import glob
 import os
 
 from realtimedatapipeline_8_project_spark.operators.text_analysis import (
+    build_incremental_index,
     build_scored_index,
 )
 from realtimedatapipeline_8_project_spark.sources.tables import (
@@ -56,13 +59,47 @@ def test_grandchild_truncation_invalidates_verified_memo(spark, sf_small):
 
 def test_stamp_records_grandchild_size_and_mtime(tmp_path):
     root = tmp_path / "art"
-    (root / "component").mkdir(parents=True)
+    (root / "component" / "batch_id=0").mkdir(parents=True)
     gc = root / "component" / "part-000.parquet"
-    gc.write_bytes(b"x" * 100)
-    s1 = _artifact_stamp(str(root))
-    st = os.stat(gc)
-    with open(gc, "r+b") as fh:
-        fh.truncate(10)
-    os.utime(gc, ns=(st.st_atime_ns, st.st_mtime_ns))  # size-only change
-    s2 = _artifact_stamp(str(root))
-    assert s1 != s2
+    ggc = root / "component" / "batch_id=0" / "part-000.parquet"
+    for f in (gc, ggc):
+        f.write_bytes(b"x" * 100)
+    # a size-only change at either depth changes the stamp
+    for f in (gc, ggc):
+        s1 = _artifact_stamp(str(root))
+        st = os.stat(f)
+        with open(f, "r+b") as fh:
+            fh.truncate(10)
+        os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+        s2 = _artifact_stamp(str(root))
+        assert s1 != s2
+
+
+def test_incremental_index_part_truncation_invalidates_verified_memo(
+    spark, sf_small
+):
+    """The incremental index keeps its postings one level deeper than the
+    scored index (root/postings/batch_id=N/part-*.parquet): an in-place
+    truncation there, with every directory mtime restored, must still
+    invalidate the memo so the next build call re-probes and rebuilds."""
+    root = build_incremental_index(spark, sf_small)  # marks verified
+    assert artifact_verified(spark, root)
+    parts = sorted(
+        glob.glob(os.path.join(root, "postings", "batch_id=*", "part-*"))
+    )
+    assert parts, "incremental index must have batch-partition part files"
+    dirs = sorted(
+        {root, os.path.join(root, "postings")}
+        | {os.path.dirname(p) for p in parts}
+    )
+    before = {d: os.stat(d) for d in dirs}
+    for victim in parts:
+        with open(victim, "r+b") as fh:
+            fh.truncate(4)
+    for d, st in before.items():
+        os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert all(os.stat(d).st_mtime_ns == st.st_mtime_ns for d, st in before.items())
+    assert not artifact_verified(spark, root)
+    root2 = build_incremental_index(spark, sf_small)
+    assert root2 == root
+    assert spark.read.parquet(os.path.join(root2, "postings")).count() > 0

@@ -242,6 +242,30 @@ def test_heavy_hitters_empty_input(spark):
     assert heavy_hitters(ev).count() == 0
 
 
+def test_heavy_hitters_rejects_dtype_without_nullable_sentinel(spark):
+    """The per-partition NULL sentinel key must be representable: a
+    float dtype would hold it as NaN and numpy str as the string "None",
+    corrupting the candidate-vs-sentinel split — so any pd_dtype with no
+    nullable mapping raises at call time, before a job runs."""
+    import pytest as _pytest
+
+    from realtimedatapipeline_8_project_spark.operators.distribution import (
+        heavy_hitters_grouped,
+    )
+
+    ev = spark.createDataFrame([(1,), (2,)], "user_id long")
+    for bad in ("float64", "int32", "object", "U"):
+        with _pytest.raises(ValueError, match="nullable"):
+            heavy_hitters(ev, pd_dtype=bad)
+    grouped = spark.createDataFrame([("a", "x")], "g string, k string")
+    with _pytest.raises(ValueError, match="nullable"):
+        heavy_hitters_grouped(
+            grouped, "g", "k", "g string, k string", pd_dtypes=("str", "float64")
+        )
+    # the nullable spellings themselves stay accepted
+    assert heavy_hitters(ev, pd_dtype="Int64").count() == 2
+
+
 def test_quantile_hist_empty_input(spark):
     df = spark.createDataFrame([], "grp string, x long")
     assert quantiles_from_hist(quantile_hist(df, "grp", "x")).count() == 0

@@ -8,6 +8,8 @@ import json
 import os
 import time
 
+from pyspark.sql import functions as F
+
 from realtimedatapipeline_8_project_spark.operators.enrich import (
     enrich_events,
     load_dim,
@@ -72,6 +74,23 @@ def test_fanout_alerts_when_threshold_exceeded(spark, sf_small, tmp_path):
     assert len(rec.batches) == 1
     assert any("exceeds 0s threshold" in a for a in rec.alerts)
     assert any("write latency" in a for a in rec.alerts)
+
+
+def test_fanout_empty_batch_writes_and_records_nothing(spark, sf_small, tmp_path):
+    """A zero-row micro-batch writes no batch partition to either sink
+    and adds no metrics record (the row count comes from the pass that
+    fills the batch cache, not from a separate emptiness job)."""
+    out = str(tmp_path / "out")
+    ev = load_table(spark, sf_small, "events").limit(20)
+    batch = derive(enrich_events(ev, load_dim(spark, sf_small)))
+    rec = MetricsRecorder()
+    write_batch_fanout(batch.where(F.lit(False)), 5, out, recorder=rec)
+    assert rec.batches == []
+    for sink in ("history", "rollup"):
+        assert not os.path.exists(os.path.join(out, sink, "batch_id=5"))
+    # the same frame with its rows is recorded with its own count
+    write_batch_fanout(batch, 6, out, recorder=rec)
+    assert [(m.batch_id, m.n_rows) for m in rec.batches] == [(6, 20)]
 
 
 def test_progress_listener_bridge(spark, sf_small, tmp_path):

@@ -117,6 +117,117 @@ def test_idempotent_rerun(spark, sf_small, workdir):
     assert sorted(map(str, read_latest(spark, out).collect())) == first_latest
 
 
+def test_fanout_failure_waits_for_every_sink_then_replay_converges(
+    spark, sf_small, workdir, monkeypatch
+):
+    """The two sinks run at the same time; a failing sink is raised only
+    after the other sink's write has finished, no fan-out thread
+    outlives the call, the cached batch is released, and a replay of the
+    same batch id gives the same history and rollup as a clean write."""
+    import threading
+
+    from pyspark import StorageLevel
+
+    from realtimedatapipeline_8_project_spark.streaming import sinks
+
+    dim = load_dim(spark, sf_small)
+    batch = derive(enrich_events(load_table(spark, sf_small, "events").limit(50), dim))
+    clean, out = (os.path.join(workdir, d) for d in ("clean", "out"))
+    write_batch_fanout(batch, 4, clean)
+
+    rollup_started = threading.Event()
+    seen = {}
+    real_history = sinks.write_history
+
+    def history(df, batch_id, output_dir):
+        # a serial fan-out never starts the rollup while this waits
+        assert rollup_started.wait(60), "sinks did not run concurrently"
+        seen["level"] = df.storageLevel
+        real_history(df, batch_id, output_dir)
+        seen["df"] = df
+
+    def rollup(df, batch_id, output_dir):
+        rollup_started.set()
+        raise RuntimeError("rollup sink down")
+
+    monkeypatch.setattr(sinks, "write_history", history)
+    monkeypatch.setattr(sinks, "write_rollup", rollup)
+    with pytest.raises(RuntimeError, match="rollup sink down"):
+        write_batch_fanout(batch, 4, out)
+    assert "df" in seen  # the history write had finished
+    assert seen["level"] != StorageLevel.NONE
+    assert seen["df"].storageLevel == StorageLevel.NONE
+    assert not [t for t in threading.enumerate() if t.name.startswith("sink-fanout")]
+    assert os.path.isdir(os.path.join(out, "history", "batch_id=4"))
+    assert not os.path.isdir(os.path.join(out, "rollup", "batch_id=4"))
+
+    monkeypatch.undo()
+    write_batch_fanout(batch, 4, out)  # replay of the failed batch
+    for sink in ("history", "rollup"):
+        got, want = (
+            sorted(map(str, spark.read.parquet(os.path.join(d, sink)).collect()))
+            for d in (out, clean)
+        )
+        assert got == want and got
+
+
+def test_fanout_sink_threads_carry_the_query_job_group(
+    spark, sf_small, workdir, monkeypatch
+):
+    """Jobs a sink starts from its fan-out thread belong to the streaming
+    query's job group (its runId), so stopping the query can cancel a
+    sink write that is still running. Plain pool threads carry no job
+    group at all."""
+    from realtimedatapipeline_8_project_spark.streaming import sinks
+    from realtimedatapipeline_8_project_spark.streaming.pipeline import (
+        read_json_stream,
+        start_pipeline,
+    )
+
+    src, out, chk = (os.path.join(workdir, d) for d in ("src", "out", "chk"))
+    _write_event_jsonl(spark, sf_small, src, n_files=2)
+    sc = spark.sparkContext
+    groups = []
+
+    def spy(write):
+        def wrapped(df, batch_id, output_dir):
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            write(df, batch_id, output_dir)
+
+        return wrapped
+
+    monkeypatch.setattr(sinks, "write_history", spy(sinks.write_history))
+    monkeypatch.setattr(sinks, "write_rollup", spy(sinks.write_rollup))
+    q = start_pipeline(
+        spark,
+        read_json_stream(spark, src, max_files_per_trigger=1),
+        load_dim(spark, sf_small),
+        out,
+        chk,
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination()
+    assert len(groups) == 4  # two batches x two sinks
+    assert set(groups) == {str(q.runId)}
+
+
+def test_fanout_without_pinned_threads(spark, sf_small, workdir, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, pyspark's inheritable_thread_target
+    returns the session it was given instead of a wrapper; the fan-out
+    must then run its sinks as plain threads."""
+    from realtimedatapipeline_8_project_spark.streaming import sinks
+
+    monkeypatch.setattr(sinks, "inheritable_thread_target", lambda f=None: f)
+    dim = load_dim(spark, sf_small)
+    batch = derive(enrich_events(load_table(spark, sf_small, "events").limit(20), dim))
+    out = os.path.join(workdir, "out")
+    n_rows, secs = sinks.fanout_batch(
+        batch, 0, out, {"history": sinks.write_history, "rollup": sinks.write_rollup}
+    )
+    assert n_rows == 20 and set(secs) == {"history", "rollup"}
+    assert spark.read.parquet(os.path.join(out, "history")).count() == 20
+
+
 def test_latest_wins_on_duplicate_key(spark, sf_small, workdir):
     """Same event_id arriving again with newer event_time replaces the row
     (Redis last-write-wins hash semantics, stream-processor.py:101-111)."""
